@@ -9,7 +9,14 @@ from pyspark.sql import functions as F
 from basis_devkit_spark.session import local_relation
 from pyspark.sql.window import Window
 
-from basis_devkit_spark.queries import load, pyoracle, register
+from basis_devkit_spark.queries import (
+    drain,
+    load,
+    pyoracle,
+    register,
+    replay,
+    scratch_root,
+)
 
 
 # ========================= §2.C windowed aggregations =========================
@@ -1401,33 +1408,17 @@ def d04m(spark: SparkSession, sf: str) -> DataFrame:
     "table must equal the batch relation exactly (no loss, no dupes)",
 )
 def c09(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_append_to_store
 
-    import os as _os
-
-    tmp = _tf.mkdtemp(prefix="bds_c09_")
+    tmp = scratch_root("bds_c09_")
     store = TableStore(tmp, "ev", spark)
-    # The file streaming source requires a DIRECTORY; stage the single
-    # parquet file behind a symlink (no data copy). Schema from the batch
-    # read; ts column excluded — its nanos conversion is a batch-side
-    # rewrite, and this query targets the ingest path, not the column.
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    _os.symlink(f"{sf}/events.parquet", _os.path.join(drop, "events.parquet"))
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(drop)
-        .select("event_id", "event_type", "value")
+    # ts column excluded — its nanos conversion is a batch-side rewrite,
+    # and this query targets the ingest path, not the column.
+    stream = replay(spark, [f"{sf}/events.parquet"]).select(
+        "event_id", "event_type", "value"
     )
-    q = stream_append_to_store(stream, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_append_to_store(stream, store, f"{tmp}/_ckpt"))
     return store.read()
 
 
@@ -1446,8 +1437,7 @@ def c09(spark: SparkSession, sf: str) -> DataFrame:
     "sink; result must equal the batch interval join exactly",
 )
 def c10(spark: SparkSession, sf: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tf
+    from pyspark.sql import types as T
 
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import (
@@ -1455,22 +1445,12 @@ def c10(spark: SparkSession, sf: str) -> DataFrame:
         stream_interval_join,
     )
 
-    tmp = _tf.mkdtemp(prefix="bds_c10_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    _os.symlink(f"{sf}/events.parquet", _os.path.join(drop, "events.parquet"))
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
-    from pyspark.sql import types as T
-
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-
     def src():
-        s = spark.readStream.schema(raw_schema).parquet(drop)
+        s = replay(spark, [f"{sf}/events.parquet"])
         # events.ts is parquet TIMESTAMP(NANOS): depending on the session's
         # nanosAsLong conf it surfaces as long (convert to micros exactly
         # as the batch loader does) or as a timestamp already.
-        if ts_is_long:
+        if isinstance(s.schema["ts"].dataType, T.LongType):
             s = s.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         # Watermarks need TIMESTAMP (ltz), not NTZ; session tz is UTC so
         # the cast is a deterministic relabel, comparisons unchanged.
@@ -1502,12 +1482,9 @@ def c10(spark: SparkSession, sf: str) -> DataFrame:
         "click_id", "purchase_id", "user_id",
         F.round("value", 4).alias("purchase_value"),
     )
+    tmp = scratch_root("bds_c10_")
     store = TableStore(tmp, "attrib", spark)
-    q = stream_append_to_store(joined, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_append_to_store(joined, store, f"{tmp}/_ckpt"))
     return store.read()
 
 
@@ -1524,33 +1501,21 @@ def c10(spark: SparkSession, sf: str) -> DataFrame:
     "batch group-by exactly",
 )
 def c11(spark: SparkSession, sf: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_upsert_to_store
 
-    tmp = _tf.mkdtemp(prefix="bds_c11_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    _os.symlink(f"{sf}/events.parquet", _os.path.join(drop, "events.parquet"))
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     agg = (
-        spark.readStream.schema(raw_schema)
-        .parquet(drop)
+        replay(spark, [f"{sf}/events.parquet"])
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
+    tmp = scratch_root("bds_c11_")
     store = TableStore(tmp, "user_stats", spark)
     store.configure(unique_on="user_id")
-    q = stream_upsert_to_store(agg, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(agg, store, f"{tmp}/_ckpt"))
     return store.read().select("user_id", "n_events", "total_value")
 
 
@@ -1706,29 +1671,15 @@ def d04q(spark: SparkSession, sf: str) -> DataFrame:
     "file) must collapse onto their originals",
 )
 def c12(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.dedup import minhash_signatures
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_upsert_to_store
 
-    tmp = _tf.mkdtemp(prefix="bds_c12_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    _os.symlink(f"{sf}/documents.parquet", _os.path.join(drop, "b0.parquet"))
-    d = spark.read.parquet(f"{sf}/documents.parquet")
-    planted = d.filter(F.col("doc_id") < 10).withColumn(
+    src = f"{sf}/documents.parquet"
+    planted = spark.read.parquet(src).filter(F.col("doc_id") < 10).withColumn(
         "doc_id", F.col("doc_id") + F.lit(1_000_000)
     )
-    pdir = _os.path.join(tmp, "planted")
-    planted.coalesce(1).write.parquet(pdir)
-    for i, f in enumerate(_glob.glob(_os.path.join(pdir, "part-*.parquet"))):
-        _shutil.copy(f, _os.path.join(drop, f"b1_{i}.parquet"))
-    stream = spark.readStream.schema(d.schema).parquet(drop)
-    sig = minhash_signatures(stream, "doc_id", "text")
+    sig = minhash_signatures(replay(spark, [src, planted]), "doc_id", "text")
     key = F.xxhash64(
         F.concat_ws(",", F.transform("sig", lambda x: x.cast("string")))
     )
@@ -1740,13 +1691,10 @@ def c12(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_members"),
         )
     )
+    tmp = scratch_root("bds_c12_")
     store = TableStore(tmp, "collapsed", spark)
     store.configure(unique_on="sig_key")
-    q = stream_upsert_to_store(agg, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(agg, store, f"{tmp}/_ckpt"))
     return store.read().select("sig_key", "rep_id", "n_members")
 
 
@@ -2806,17 +2754,9 @@ def d02j(spark: SparkSession, sf: str) -> DataFrame:
     "join+group-by exactly",
 )
 def c13(spark: SparkSession, sf: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_upsert_to_store
 
-    tmp = _tf.mkdtemp(prefix="bds_c13_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    _os.symlink(f"{sf}/events.parquet", _os.path.join(drop, "events.parquet"))
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     static_dim = (
         spark.read.parquet(f"{sf}/events.parquet")
         .select("user_id")
@@ -2825,8 +2765,7 @@ def c13(spark: SparkSession, sf: str) -> DataFrame:
         .withColumnRenamed("user_id", "__u")
     )
     agg = (
-        spark.readStream.schema(raw_schema)
-        .parquet(drop)
+        replay(spark, [f"{sf}/events.parquet"])
         .join(F.broadcast(static_dim), F.col("user_id") == F.col("__u"))
         .groupBy("segment")
         .agg(
@@ -2834,13 +2773,10 @@ def c13(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
+    tmp = scratch_root("bds_c13_")
     store = TableStore(tmp, "segment_stats", spark)
     store.configure(unique_on="segment")
-    q = stream_upsert_to_store(agg, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(agg, store, f"{tmp}/_ckpt"))
     return store.read().select("segment", "n_events", "total_value")
 
 
@@ -3364,8 +3300,6 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
     "preserve the doubles exactly",
 )
 def d15(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.similarity import (
         ann_index_build,
         ann_join_indexed,
@@ -3378,7 +3312,7 @@ def d15(spark: SparkSession, sf: str) -> DataFrame:
     centroids_df, cells = ann_index_build(
         right, nlist=8, centroids=_ivf_seed_centroids(emb, 8)
     )
-    tmp = _tf.mkdtemp(prefix="bds_d15_")
+    tmp = scratch_root("bds_d15_")
     cstore = TableStore(tmp, "ann_centroids", spark)
     cstore.write_replace(centroids_df)
     kstore = TableStore(tmp, "ann_cells", spark)
@@ -3401,11 +3335,6 @@ def d15(spark: SparkSession, sf: str) -> DataFrame:
     "streamed index must match the one-shot d03h oracle byte-for-byte",
 )
 def c14(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.similarity import (
         ann_index_assign,
         ann_join_indexed,
@@ -3417,30 +3346,13 @@ def c14(spark: SparkSession, sf: str) -> DataFrame:
     left = emb.filter(F.col("vec_id") % 2 == 0)
     cents = _ivf_seed_centroids(emb, 8)
 
-    tmp = _tf.mkdtemp(prefix="bds_c14_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    # the odd-id (right) corpus arrives as two single-file batches
-    for tag, mod in (("a", 1), ("b", 3)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        emb.filter(F.col("vec_id") % 4 == mod).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    # the odd-id (right) corpus arrives as two batches
+    stream = replay(spark, [emb.filter(F.col("vec_id") % 4 == m) for m in (1, 3)])
     assigned = ann_index_assign(stream, cents)
+    tmp = scratch_root("bds_c14_")
     store = TableStore(tmp, "ann_cells", spark)
     store.configure(unique_on="vec_id")
-    q = stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt"))
     return ann_join_indexed(
         left, cents, store.read(), k=3, nprobe=4, score_round=4
     ).select("query_id", "match_id", "score", "rank")
@@ -3460,11 +3372,6 @@ def c14(spark: SparkSession, sf: str) -> DataFrame:
     "d20 oracle exactly",
 )
 def c15(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.similarity import (
         fit_scalar_quantizer,
         ivf_quantized_topk_indexed,
@@ -3478,30 +3385,13 @@ def c15(spark: SparkSession, sf: str) -> DataFrame:
     cents = _ivf_seed_centroids(emb, 8)
     quant = fit_scalar_quantizer(emb)
 
-    tmp = _tf.mkdtemp(prefix="bds_c15_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    # the corpus arrives as two single-file batches (even ids, odd ids)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        emb.filter(F.col("vec_id") % 2 == mod).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    # the corpus arrives as two batches (even ids, odd ids)
+    stream = replay(spark, [emb.filter(F.col("vec_id") % 2 == m) for m in (0, 1)])
     assigned = quantized_cells_assign(stream, cents, quant)
+    tmp = scratch_root("bds_c15_")
     store = TableStore(tmp, "quant_cells", spark)
     store.configure(unique_on="vec_id")
-    q = stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt"))
     return ivf_quantized_topk_indexed(
         q_side, store.read(), emb, cents, quant, k=5, nprobe=4, refine=4,
         score_round=4,
@@ -3520,11 +3410,6 @@ def c15(spark: SparkSession, sf: str) -> DataFrame:
     "oracle byte-for-byte",
 )
 def c16(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.sketches import (
         hll_estimate,
         hll_registers,
@@ -3533,18 +3418,6 @@ def c16(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     ev = load(spark, sf, "events")
-
-    tmp = _tf.mkdtemp(prefix="bds_c16_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        ev.filter(F.col("event_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def batch_registers(batch: DataFrame) -> DataFrame:
         users = hll_registers(
@@ -3577,18 +3450,11 @@ def c16(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [ev.filter(F.col("event_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c16_")
     store = TableStore(tmp, "sketch_regs", spark)
     store.configure(unique_on=["metric", "bucket"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
 
     est = hll_estimate(store.read(), p=10, group_cols=["metric"])
     exact_t = ev.groupBy("event_type").agg(
@@ -4520,11 +4386,6 @@ def d32(spark: SparkSession, sf: str) -> DataFrame:
     "maintainable at crawl cadence",
 )
 def c17(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.sketches import (
         hist_build,
         hist_fit,
@@ -4535,18 +4396,6 @@ def c17(spark: SparkSession, sf: str) -> DataFrame:
 
     li = load(spark, sf, "lineitem")
     fit = hist_fit(li, "l_extendedprice", 1024)
-
-    tmp = _tf.mkdtemp(prefix="bds_c17_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        li.filter(F.col("l_orderkey") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         bins = hist_build(batch, "l_extendedprice", 1024, fit=fit)
@@ -4561,18 +4410,11 @@ def c17(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("cnt"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [li.filter(F.col("l_orderkey") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c17_")
     store = TableStore(tmp, "hist_bins", spark)
     store.configure(unique_on="bin")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return hist_quantiles(store.read(), fit, [0.25, 0.5, 0.75, 0.9, 0.99])
 
 
@@ -4593,11 +4435,6 @@ def c17(spark: SparkSession, sf: str) -> DataFrame:
     "re-ingests the history",
 )
 def c18(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.graphrank import pagerank_fixed_point
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
@@ -4609,35 +4446,22 @@ def c18(spark: SparkSession, sf: str) -> DataFrame:
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
     )
 
-    tmp = _tf.mkdtemp(prefix="bds_c18_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        edges.filter(F.pmod(F.xxhash64("src", "dst"), F.lit(2)) == mod).coalesce(
-            1
-        ).write.parquet(part_dir)
-        src_f = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src_f, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         # per-key combine IS last-write-wins here (edges carry no
         # payload): distinct within the batch, upsert dedups vs store
         return batch.select("src", "dst").distinct()
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
+    stream = replay(
+        spark,
+        [
+            edges.filter(F.pmod(F.xxhash64("src", "dst"), F.lit(2)) == m)
+            for m in (0, 1)
+        ],
     )
+    tmp = scratch_root("bds_c18_")
     store = TableStore(tmp, "edges", spark)
     store.configure(unique_on=["src", "dst"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return pagerank_fixed_point(
         store.read(), iters=10, raw_scaled=True
     ).select("node", "rank_scaled")
@@ -4730,11 +4554,6 @@ def d36(spark: SparkSession, sf: str) -> DataFrame:
     "history",
 )
 def c19(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.dsir import (
         dsir_bucket_counts,
         dsir_score,
@@ -4744,17 +4563,6 @@ def c19(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     docs = load(spark, sf, "documents")
-    tmp = _tf.mkdtemp(prefix="bds_c19_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        docs.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src_f = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src_f, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         cnts = dsir_bucket_counts(batch)
@@ -4769,18 +4577,11 @@ def c19(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("cnt"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c19_")
     store = TableStore(tmp, "dsir_counts", spark)
     store.configure(unique_on="bucket")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     target = docs.filter(F.col("source") == "src0")
     tc = dsir_bucket_counts(target)
     rows, default_w = dsir_weights(store.read(), tc)
@@ -4804,11 +4605,6 @@ def c19(spark: SparkSession, sf: str) -> DataFrame:
     "exactly",
 )
 def c20(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.embeddings import jl_project
     from basis_devkit_spark.operators.similarity import (
         fit_scalar_quantizer,
@@ -4835,31 +4631,12 @@ def c20(spark: SparkSession, sf: str) -> DataFrame:
     ]
     quant = fit_scalar_quantizer(cr, "__rv")
 
-    tmp = _tf.mkdtemp(prefix="bds_c20_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        emb.filter(F.col("vec_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [emb.filter(F.col("vec_id") % 2 == m) for m in (0, 1)])
     assigned = jl_quantized_cells_assign(stream, centroids, quant)
+    tmp = scratch_root("bds_c20_")
     store = TableStore(tmp, "jl_cells", spark)
     store.configure(unique_on="vec_id")
-    q = stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_upsert_to_store(assigned, store, f"{tmp}/_ckpt"))
     return jl_ivf_quantized_topk_indexed(
         q_side, store.read(), emb, centroids, quant, k=5, nprobe=4,
         refine=4, score_round=4,
@@ -4882,27 +4659,11 @@ def c20(spark: SparkSession, sf: str) -> DataFrame:
     "learn, d37 apply)",
 )
 def c21(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.bpe import bpe_learn_merges
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     docs = load(spark, sf, "documents")
-    tmp = _tf.mkdtemp(prefix="bds_c21_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        docs.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src_f = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src_f, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def word_weights(batch: DataFrame) -> DataFrame:
         toks = F.explode(
@@ -4928,18 +4689,11 @@ def c21(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("weight"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c21_")
     store = TableStore(tmp, "bpe_words", spark)
     store.configure(unique_on="word")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return bpe_learn_merges(
         docs, num_merges=8, words=store.read()
     ).select(
@@ -4949,35 +4703,6 @@ def c21(spark: SparkSession, sf: str) -> DataFrame:
         "merged",
         "pair_count",
     )
-
-
-def _stream_drop_dir(spark, df, prefix: str, conds):
-    """Shared scaffold for the file-source streaming queries (c22/c23/
-    c24): write ``df`` split by the ordered ``conds`` predicates into a
-    drop directory, one parquet file per micro-batch, with PINNED
-    mtimes so the file source's batch order IS the list order (the
-    arrival-order invariant the cursor-carrying queries depend on).
-    Returns ``(tmp_root, drop_dir, schema)``."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
-    tmp = _tf.mkdtemp(prefix=prefix)
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    first = None
-    for i, cond in enumerate(conds):
-        tag = chr(ord("a") + i)
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        df.filter(cond).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(drop, f"{tag}.parquet")
-        _shutil.copy(src, dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        if first is None:
-            first = dst
-    return tmp, drop, spark.read.parquet(first).schema
 
 
 @register(
@@ -5009,11 +4734,6 @@ def c22(spark: SparkSession, sf: str) -> DataFrame:
     # maintained word relation in production)
     mt, vocab = bpe_learn_merges(docs, "text", num_merges=8, emit_vocab=True)
 
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, docs, "bds_c22_",
-        [F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1],
-    )
-
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         counted = bpe_token_counts_indexed(batch, vocab, mt).select(
             "doc_id", "n_bpe_tokens"
@@ -5025,18 +4745,11 @@ def c22(spark: SparkSession, sf: str) -> DataFrame:
             existing.join(counted.select("doc_id"), "doc_id", "left_anti")
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c22_")
     store = TableStore(tmp, "tok_counts", spark)
     store.configure(unique_on="doc_id")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     # the stream is done consuming the fixed artifacts: drop the pinned
     # vocab checkpoint (the store holds the results; see d37)
     release_tokenizer_vocab(vocab)
@@ -5082,29 +4795,22 @@ def c23(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents")
     half = docs.count() // 2
-    # id-RANGE batches (not id-parity): arrival order == global id
-    # order, so the one-shot oracle is the plain d11 prefix
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, docs, "bds_c23_",
-        [F.col("doc_id") < half, F.col("doc_id") >= half],
-    )
-
+    tmp = scratch_root("bds_c23_")
     layout_store = TableStore(tmp, "packed", spark)
     layout_store.configure(unique_on="doc_id")
     state_store = TableStore(tmp, "pack_state", spark)
     state_store.configure(unique_on="state_id")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
+    # id-RANGE batches (not id-parity): arrival order == global id
+    # order, so the one-shot oracle is the plain d11 prefix
+    stream = replay(
+        spark,
+        [docs.filter(F.col("doc_id") < half), docs.filter(F.col("doc_id") >= half)],
     )
-    q = stream_pack_append_to_store(
-        stream, layout_store, state_store, f"{tmp}/_ckpt", budget=512
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        stream_pack_append_to_store(
+            stream, layout_store, state_store, f"{tmp}/_ckpt", budget=512
+        )
+    )
     return layout_store.read().select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -5140,33 +4846,27 @@ def c24(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents")
     mt, vocab = bpe_learn_merges(docs, "text", num_merges=8, emit_vocab=True)
     half = docs.count() // 2
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, docs, "bds_c24_",
-        [F.col("doc_id") < half, F.col("doc_id") >= half],
-    )
 
     def tokenize(batch: DataFrame) -> DataFrame:
         return bpe_token_counts_indexed(batch, vocab, mt).select(
             "doc_id", "n_bpe_tokens"
         )
 
+    tmp = scratch_root("bds_c24_")
     layout_store = TableStore(tmp, "packed", spark)
     layout_store.configure(unique_on="doc_id")
     state_store = TableStore(tmp, "pack_state", spark)
     state_store.configure(unique_on="state_id")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
+    stream = replay(
+        spark,
+        [docs.filter(F.col("doc_id") < half), docs.filter(F.col("doc_id") >= half)],
     )
-    q = stream_pack_append_to_store(
-        stream, layout_store, state_store, f"{tmp}/_ckpt", budget=512,
-        n_tokens_col="n_bpe_tokens", prepare_fn=tokenize,
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        stream_pack_append_to_store(
+            stream, layout_store, state_store, f"{tmp}/_ckpt", budget=512,
+            n_tokens_col="n_bpe_tokens", prepare_fn=tokenize,
+        )
+    )
     # the stream is done consuming the fixed artifacts: drop the pinned
     # vocab checkpoint (the store holds the results; see d37)
     release_tokenizer_vocab(vocab)
@@ -5489,10 +5189,6 @@ def c25(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     docs = load(spark, sf, "documents")
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, docs, "bds_c25_",
-        [F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1],
-    )
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         cand = quality_score(batch, "text").select(
@@ -5508,18 +5204,11 @@ def c25(spark: SparkSession, sf: str) -> DataFrame:
             cand, "quality_score", 5, group_col="source", salt="ares"
         )
 
+    tmp = scratch_root("bds_c25_")
     store = TableStore(tmp, "reservoir", spark)
     store.configure(unique_on=["source", "rank"])
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return store.read().select("source", "doc_id", "quality_score", "rank")
 
 
@@ -5862,10 +5551,6 @@ def c26(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     docs = load(spark, sf, "documents")
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, docs, "bds_c26_",
-        [F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1],
-    )
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         cand = registrable_domain(
@@ -5887,18 +5572,11 @@ def c26(spark: SparkSession, sf: str) -> DataFrame:
             F.col("rank").alias("domain_rank"),
         )
 
+    tmp = scratch_root("bds_c26_")
     store = TableStore(tmp, "domain_cap", spark)
     store.configure(unique_on=["domain", "domain_rank"])
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return store.read().select(
         "doc_id", "domain", "quality_score", "domain_rank"
     )
@@ -6392,11 +6070,6 @@ def d51(spark: SparkSession, sf: str) -> DataFrame:
     "+ one n_bins-bounded agg + an n_bins-keyed upsert",
 )
 def c32(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.quality_model import (
         calibration_bin_state,
         calibration_bins_from_state,
@@ -6413,18 +6086,6 @@ def c32(spark: SparkSession, sf: str) -> DataFrame:
         labeled.orderBy("doc_id").limit(200).select("text", "label").collect()
     )
     wq, bias = fit_hashed_logreg([(r["text"], r["label"]) for r in sample])
-
-    tmp = _tf.mkdtemp(prefix="bds_c32_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        d.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         btoks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -6454,18 +6115,11 @@ def c32(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("decimal(27,6)").alias("ssum"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [d.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c32_")
     store = TableStore(tmp, "calib_bins", spark)
     store.configure(unique_on="bin")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return calibration_bins_from_state(store.read())
 
 
@@ -6571,10 +6225,6 @@ def c27(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     orders = load(spark, sf, "orders")
-    tmp, drop, raw_schema = _stream_drop_dir(
-        spark, orders, "bds_c27_",
-        [F.col("o_orderkey") % 2 == 0, F.col("o_orderkey") % 2 == 1],
-    )
     rules = [
         ("not_null", "o_custkey"),
         ("accepted_values", "o_orderstatus", ["O", "F", "P"]),
@@ -6605,18 +6255,13 @@ def c27(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
+    tmp = scratch_root("bds_c27_")
     store = TableStore(tmp, "dq_monitor", spark)
     store.configure(unique_on="rule")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
+    stream = replay(
+        spark, [orders.filter(F.col("o_orderkey") % 2 == m) for m in (0, 1)]
     )
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return store.read().select("rule", "kind", "n_rows", "n_violations")
 
 
@@ -7419,11 +7064,6 @@ def d61(spark: SparkSession, sf: str) -> DataFrame:
     "k*labels-bounded upsert — packed history is never re-read",
 )
 def c28(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.clustering import (
         kmeans_assign,
         kmeans_fit_predict,
@@ -7435,18 +7075,6 @@ def c28(spark: SparkSession, sf: str) -> DataFrame:
     _, cents = kmeans_fit_predict(
         emb, "vec_id", "embedding", k=8, iters=2
     )
-
-    tmp = _tf.mkdtemp(prefix="bds_c28_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        emb.filter(F.col("vec_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def batch_stats(batch: DataFrame) -> DataFrame:
         asg = kmeans_assign(batch, "embedding", cents)
@@ -7479,18 +7107,11 @@ def c28(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("decimal(28,9)").alias("inertia_dec"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [emb.filter(F.col("vec_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c28_")
     store = TableStore(tmp, "kmeans_profile", spark)
     store.configure(unique_on=["cluster", "label"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
 
     state = store.read()
     scale = 1000000.0
@@ -7711,11 +7332,6 @@ def d63(spark: SparkSession, sf: str) -> DataFrame:
     "commit for free",
 )
 def c29(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.text import (
         zipf_fit_from_counts,
         zipf_term_counts,
@@ -7724,18 +7340,6 @@ def c29(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
-
-    tmp = _tf.mkdtemp(prefix="bds_c29_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        docs.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         counts = zipf_term_counts(batch, "text")
@@ -7750,18 +7354,11 @@ def c29(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("long").alias("freq"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c29_")
     store = TableStore(tmp, "term_counts", spark)
     store.configure(unique_on="term")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return zipf_fit_from_counts(store.read(), top_r=256)
 
 
@@ -8144,12 +7741,6 @@ def d65(spark: SparkSession, sf: str) -> DataFrame:
     "must equal the BATCH left interval join exactly",
 )
 def c30(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-    import time as _time
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import (
         stream_append_to_store,
@@ -8172,46 +7763,20 @@ def c30(spark: SparkSession, sf: str) -> DataFrame:
         (F.max("ts") + F.expr("interval 30 days")).alias("far_ts")
     ).collect()[0]["far_ts"]
 
-    tmp = _tf.mkdtemp(prefix="bds_c30_")
-    drops = {}
-    for side, df_side, ts_col, id_cols in (
-        ("v", views, "view_ts", ("view_id", "user_id")),
-        ("p", buys, "purchase_ts", ("purchase_id", "p_user_id")),
-    ):
-        drop = _os.path.join(tmp, f"drop_{side}")
-        _os.makedirs(drop, exist_ok=True)
-        for tag, mod in (("a", 0), ("b", 1)):
-            part_dir = _os.path.join(tmp, f"part_{side}_{tag}")
-            df_side.filter(
-                F.col(id_cols[0]) % 2 == mod
-            ).coalesce(1).write.parquet(part_dir)
-            src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-            _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-        # the flush batch: one sentinel row far past every real event —
-        # advances the watermark so end-of-replay unmatched state emits
-        sent_dir = _os.path.join(tmp, f"sent_{side}")
-        df_side.limit(1).select(
-            F.lit(-1).cast("long").alias(id_cols[0]),
-            F.lit(-1).cast("long").alias(id_cols[1]),
+    def side(df_side, ts_col, id_col, key_col):
+        # two data batches, then the flush batch: one sentinel row far
+        # past every real event — advances the watermark so end-of-replay
+        # unmatched state emits
+        flush = df_side.limit(1).select(
+            F.lit(-1).cast("long").alias(id_col),
+            F.lit(-1).cast("long").alias(key_col),
             F.lit(far).alias(ts_col),
-        ).coalesce(1).write.parquet(sent_dir)
-        src = _glob.glob(_os.path.join(sent_dir, "part-*.parquet"))[0]
-        _time.sleep(0.01)
-        _shutil.copy(src, _os.path.join(drop, "z_flush.parquet"))
-        drops[side] = drop
+        )
+        halves = [df_side.filter(F.col(id_col) % 2 == m) for m in (0, 1)]
+        return replay(spark, [*halves, flush])
 
-    vschema = spark.read.parquet(drops["v"]).schema
-    pschema = spark.read.parquet(drops["p"]).schema
-    vstream = (
-        spark.readStream.schema(vschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drops["v"])
-    )
-    pstream = (
-        spark.readStream.schema(pschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drops["p"])
-    )
+    vstream = side(views, "view_ts", "view_id", "user_id")
+    pstream = side(buys, "purchase_ts", "purchase_id", "p_user_id")
     joined = stream_interval_join(
         vstream.withColumnRenamed("user_id", "on_key"),
         pstream.withColumnRenamed("p_user_id", "on_key"),
@@ -8222,14 +7787,9 @@ def c30(spark: SparkSession, sf: str) -> DataFrame:
         watermark="0 seconds",
         how="leftOuter",
     )
+    tmp = scratch_root("bds_c30_")
     store = TableStore(tmp, "attributed_views", spark)
-    q = stream_append_to_store(
-        joined, store, f"{tmp}/_ckpt"
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_append_to_store(joined, store, f"{tmp}/_ckpt"))
     return (
         store.read()
         .filter(F.col("view_id") >= 0)  # drop the flush sentinel
@@ -8543,12 +8103,6 @@ def e20(spark: SparkSession, sf: str) -> DataFrame:
     "count upsert — history is never re-read",
 )
 def c31(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-    import time as _time
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import (
         stream_transition_counts_to_store,
@@ -8562,37 +8116,14 @@ def c31(spark: SparkSession, sf: str) -> DataFrame:
         .alias("c")
     ).collect()[0]["c"]
 
-    tmp = _tf.mkdtemp(prefix="bds_c31_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    halves = (
-        ("a", F.unix_micros(F.col("ts").cast("timestamp")) <= cut),
-        ("b", F.unix_micros(F.col("ts").cast("timestamp")) > cut),
-    )
-    for tag, cond in halves:
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        ev.filter(cond).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _time.sleep(0.01)  # mtime order = arrival order
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    stream = replay(spark, [ev.filter(us <= cut), ev.filter(us > cut)])
+    tmp = scratch_root("bds_c31_")
     counts = TableStore(tmp, "transition_counts", spark)
     counts.configure(unique_on=["state", "next"])
     cursors = TableStore(tmp, "user_cursors", spark)
     cursors.configure(unique_on="u")
-    q = stream_transition_counts_to_store(
-        stream, counts, cursors, f"{tmp}/_ckpt"
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_transition_counts_to_store(stream, counts, cursors, f"{tmp}/_ckpt"))
     return counts.read().select("state", "next", "n_transitions")
 
 
@@ -9129,29 +8660,12 @@ def e21(spark: SparkSession, sf: str) -> DataFrame:
     "ingest prints per commit without re-reading history",
 )
 def c33(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.domains import registrable_domain
     from basis_devkit_spark.operators.text import quality_score
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     d0 = load(spark, sf, "documents").select("doc_id", "source", "text")
-
-    tmp = _tf.mkdtemp(prefix="bds_c33_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        d0.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def _state(batch: DataFrame) -> DataFrame:
         b = quality_score(batch, "text").withColumn("url", _synth_url_col())
@@ -9203,18 +8717,11 @@ def c33(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("max_doc_id"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [d0.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c33_")
     store = TableStore(tmp, "domain_profile", spark)
     store.configure(unique_on="domain")
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     st = store.read()
     return st.select(
         "domain", "n_docs", "n_bytes",
@@ -9462,12 +8969,6 @@ def d81(spark: SparkSession, sf: str) -> DataFrame:
     "never text",
 )
 def c34(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-    import time as _time
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import (
         stream_novelty_gate_to_store,
@@ -9485,35 +8986,13 @@ def c34(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("text"),
     )
 
-    tmp = _tf.mkdtemp(prefix="bds_c34_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        docs.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _time.sleep(0.01)  # mtime order = arrival order
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [docs.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c34_")
     reports = TableStore(tmp, "novelty_reports", spark)
     reports.configure(unique_on="doc_id")
     hashes = TableStore(tmp, "para_hashes", spark)
     hashes.configure(unique_on="para_hash")
-    q = stream_novelty_gate_to_store(
-        stream, reports, hashes, f"{tmp}/_ckpt"
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_novelty_gate_to_store(stream, reports, hashes, f"{tmp}/_ckpt"))
     return reports.read().select(
         "doc_id", "n_paragraphs", "n_seen", "novelty"
     )
@@ -9789,49 +9268,26 @@ def d83(spark: SparkSession, sf: str) -> DataFrame:
     "contract); in-order arrival per series required",
 )
 def c35(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_cusum_to_store
 
     ev = load(spark, sf, "events").select(
         "user_id", "event_id", "ts", "value"
     )
-    tmp = _tf.mkdtemp(prefix="bds_c35_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
     cut = "2024-01-15"
-    for tag, cond in (
-        ("a", F.col("ts") < cut),
-        ("b", F.col("ts") >= cut),
-    ):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        ev.filter(cond).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)])
+    tmp = scratch_root("bds_c35_")
     rows_store = TableStore(tmp, "cusum_rows", spark)
     rows_store.configure(unique_on="event_id")
     state_store = TableStore(tmp, "cusum_state", spark)
     state_store.configure(unique_on="g")
-    q = stream_cusum_to_store(
-        stream, rows_store, state_store, f"{tmp}/_ckpt",
-        value_col="value", group_col="user_id", ts_col="ts",
-        id_col="event_id", target=50.0, slack=5.0, threshold=300.0,
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        stream_cusum_to_store(
+            stream, rows_store, state_store, f"{tmp}/_ckpt",
+            value_col="value", group_col="user_id", ts_col="ts",
+            id_col="event_id", target=50.0, slack=5.0, threshold=300.0,
+        )
+    )
     return rows_store.read().select(
         "user_id", "event_id", "ts", "value",
         "cusum_pos", "cusum_neg", "is_alarm",
@@ -10159,11 +9615,6 @@ def d87(spark: SparkSession, sf: str) -> DataFrame:
     "num_hashes longs regardless of corpus size",
 )
 def c36(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.dedup import (
         overlap_matrix_from_sketch,
         source_minhash_sketch,
@@ -10172,17 +9623,6 @@ def c36(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     d0 = load(spark, sf, "documents").select("doc_id", "source", "text")
-    tmp = _tf.mkdtemp(prefix="bds_c36_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        d0.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         state = source_minhash_sketch(batch)
@@ -10199,18 +9639,11 @@ def c36(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("min_val"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [d0.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c36_")
     store = TableStore(tmp, "overlap_sketch", spark)
     store.configure(unique_on=["source", "pos"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return overlap_matrix_from_sketch(store.read())
 
 
@@ -10517,11 +9950,6 @@ def e25(spark: SparkSession, sf: str) -> DataFrame:
     "verbatim). State is trigram-type-sized regardless of corpus",
 )
 def c37(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.text import (
         kn_trigram_counts,
         kn_trigram_lm_score_from_counts,
@@ -10531,17 +9959,6 @@ def c37(spark: SparkSession, sf: str) -> DataFrame:
 
     d = load(spark, sf, "documents").select("doc_id", "text")
     train = d.filter(F.col("doc_id") % 5 == 0)
-    tmp = _tf.mkdtemp(prefix="bds_c37_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        train.filter(
-            (F.col("doc_id") / 5).cast("long") % 2 == mod
-        ).coalesce(1).write.parquet(part_dir)
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         state = kn_trigram_counts(batch)
@@ -10561,18 +9978,17 @@ def c37(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
+    stream = replay(
+        spark,
+        [
+            train.filter((F.col("doc_id") / 5).cast("long") % 2 == m)
+            for m in (0, 1)
+        ],
     )
+    tmp = scratch_root("bds_c37_")
     store = TableStore(tmp, "kn_counts", spark)
     store.configure(unique_on=["w1", "w2", "w3"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return kn_trigram_lm_score_from_counts(store.read(), d).select(
         "doc_id", "n_trigrams", "lm_score"
     )
@@ -10686,28 +10102,12 @@ def d90(spark: SparkSession, sf: str) -> DataFrame:
     "contract); state is distinct-word-sized regardless of corpus",
 )
 def c38(spark: SparkSession, sf: str) -> DataFrame:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tf
-
     from basis_devkit_spark.operators.bpe import _word_weights
     from basis_devkit_spark.operators.unigram import unigram_lm_fit
     from basis_devkit_spark.storage.store import TableStore
     from basis_devkit_spark.streaming.ops import stream_merge_to_store
 
     d = load(spark, sf, "documents").select("doc_id", "text")
-    tmp = _tf.mkdtemp(prefix="bds_c38_")
-    drop = _os.path.join(tmp, "drop")
-    _os.makedirs(drop, exist_ok=True)
-    for tag, mod in (("a", 0), ("b", 1)):
-        part_dir = _os.path.join(tmp, f"part_{tag}")
-        d.filter(F.col("doc_id") % 2 == mod).coalesce(1).write.parquet(
-            part_dir
-        )
-        src = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        _shutil.copy(src, _os.path.join(drop, f"{tag}.parquet"))
-    raw_schema = spark.read.parquet(_os.path.join(drop, "a.parquet")).schema
 
     def merge(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
         state = _word_weights(batch, "text")
@@ -10722,18 +10122,11 @@ def c38(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("long").alias("weight"),
         )
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
+    stream = replay(spark, [d.filter(F.col("doc_id") % 2 == m) for m in (0, 1)])
+    tmp = scratch_root("bds_c38_")
     store = TableStore(tmp, "unigram_words", spark)
     store.configure(unique_on=["word"])
-    q = stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream_merge_to_store(stream, store, f"{tmp}/_ckpt", merge))
     return unigram_lm_fit(
         d, vocab_size=300, seed_size=800, max_piece_len=4, em_iters=2,
         words=store.read().select("word", "weight"),

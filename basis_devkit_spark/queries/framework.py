@@ -5,14 +5,12 @@ oracles expressing the contracted result."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basis_devkit_spark.session import local_relation
 
-from basis_devkit_spark.queries import load, register
+from basis_devkit_spark.queries import load, register, scratch_root
 
 
 @register(
@@ -37,7 +35,7 @@ def a03(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a03_")
+    tmp = scratch_root("bds_a03_")
     store = TableStore(tmp, "orders", spark)
     store.write_replace(load(spark, sf, "orders"))
     t = Table("orders", "r")
@@ -67,7 +65,7 @@ def a05(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a05_")
+    tmp = scratch_root("bds_a05_")
     store = TableStore(tmp, "t", spark)
     t = Table("t", "w")
     t.bind(store, spark)
@@ -94,7 +92,7 @@ def a06(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a06_")
+    tmp = scratch_root("bds_a06_")
     store = TableStore(tmp, "t", spark)
     t = Table("t", "w")
     t.bind(store, spark)
@@ -116,7 +114,7 @@ def a13(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a13_")
+    tmp = scratch_root("bds_a13_")
     store = TableStore(tmp, "events", spark)
     store.write_replace(load(spark, sf, "events"))
     t = Table("events", "r")
@@ -137,7 +135,7 @@ def a08(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a08_")
+    tmp = scratch_root("bds_a08_")
     src_store = TableStore(tmp, "orders_src", spark)
     src_store.write_replace(load(spark, sf, "orders"))
     src_store.read().createOrReplaceTempView("orders_src")
@@ -162,7 +160,7 @@ def a07(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a07_")
+    tmp = scratch_root("bds_a07_")
     store = TableStore(tmp, "t", spark)
     t = Table("t", "w")
     t.bind(store, spark)
@@ -180,7 +178,7 @@ def a07(spark: SparkSession, sf: str) -> DataFrame:
 def a09(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a09_")
+    tmp = scratch_root("bds_a09_")
     store = TableStore(tmp, "t", spark)
     orders = load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     v1 = store.write_replace(orders)
@@ -201,7 +199,7 @@ def a02(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a02_")
+    tmp = scratch_root("bds_a02_")
     store = TableStore(tmp, "customer", spark)
     store.write_replace(load(spark, sf, "customer").select("c_custkey", "c_acctbal"))
     t = Table("customer", "r")
@@ -227,7 +225,7 @@ def a04(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a04_")
+    tmp = scratch_root("bds_a04_")
     store = TableStore(tmp, "t", spark)
     t = Table("t", "w")
     t.bind(store, spark)
@@ -251,7 +249,7 @@ def a04(spark: SparkSession, sf: str) -> DataFrame:
 def a06b(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a06b_")
+    tmp = scratch_root("bds_a06b_")
     store = TableStore(tmp, "orders", spark)
     store.configure(partition_by="o_orderstatus")
     store.write_replace(
@@ -273,7 +271,7 @@ def a06b(spark: SparkSession, sf: str) -> DataFrame:
 def a09b(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a09b_")
+    tmp = scratch_root("bds_a09b_")
     store = TableStore(tmp, "t", spark)
     orders = load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     v1 = store.write_replace(orders.filter(F.col("o_orderkey") % 4 == 0))
@@ -298,7 +296,7 @@ def a14(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a14_")
+    tmp = scratch_root("bds_a14_")
     store = TableStore(tmp, "events", spark)
     store.write_replace(load(spark, sf, "events"))
     t = Table("events", "r")
@@ -324,7 +322,7 @@ def a15(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.node import Table
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a15_")
+    tmp = scratch_root("bds_a15_")
     store = TableStore(tmp, "events", spark)
     store.write_replace(load(spark, sf, "events"))
     t = Table("events", "r")
@@ -349,7 +347,7 @@ def a15(spark: SparkSession, sf: str) -> DataFrame:
 def a17(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.storage.state import StateStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a17_")
+    tmp = scratch_root("bds_a17_")
     StateStore(tmp).save("node1", {"cursor": "42", "phase": "two"})
     reloaded = StateStore(tmp).load("node1")  # fresh instance, disk read
     rows = sorted(reloaded.items())
@@ -368,7 +366,7 @@ def a19(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.engine import Engine
 
-    tmp = tempfile.mkdtemp(prefix="bds_a19_")
+    tmp = scratch_root("bds_a19_")
     app = os.path.join(tmp, "app")
     os.makedirs(app)
     with open(os.path.join(app, "graph.yml"), "w") as f:
@@ -438,7 +436,7 @@ def a20(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.engine import Engine
 
-    tmp = tempfile.mkdtemp(prefix="bds_a20_")
+    tmp = scratch_root("bds_a20_")
     app = os.path.join(tmp, "app")
     os.makedirs(app)
     with open(os.path.join(app, "graph.yml"), "w") as f:
@@ -492,7 +490,7 @@ def a22(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.engine import Engine
 
-    tmp = tempfile.mkdtemp(prefix="bds_a22_")
+    tmp = scratch_root("bds_a22_")
     app = os.path.join(tmp, "app")
     os.makedirs(app)
     with open(os.path.join(app, "graph.yml"), "w") as f:
@@ -566,7 +564,7 @@ def c08(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.engine import Engine
 
-    tmp = tempfile.mkdtemp(prefix="bds_c08_")
+    tmp = scratch_root("bds_c08_")
     app = os.path.join(tmp, "app")
     os.makedirs(app)
     with open(os.path.join(app, "graph.yml"), "w") as f:
@@ -639,7 +637,7 @@ def c08(spark: SparkSession, sf: str) -> DataFrame:
 def b02(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.sources import read_csv, write_csv
 
-    tmp = tempfile.mkdtemp(prefix="bds_b02_")
+    tmp = scratch_root("bds_b02_")
     write_csv(load(spark, sf, "nation"), tmp)
     return read_csv(
         spark, tmp, schema="n_nationkey int, n_name string, n_regionkey int"
@@ -654,7 +652,7 @@ def b02(spark: SparkSession, sf: str) -> DataFrame:
 def b02b(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.sources import read_json, write_json
 
-    tmp = tempfile.mkdtemp(prefix="bds_b02b_")
+    tmp = scratch_root("bds_b02b_")
     write_json(load(spark, sf, "region"), tmp)
     return read_json(spark, tmp, schema="r_regionkey int, r_name string")
 
@@ -679,7 +677,7 @@ def a24(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.engine import Engine
     from basis_devkit_spark.graph.components import publish_component
 
-    tmp = tempfile.mkdtemp(prefix="bds_a24_")
+    tmp = scratch_root("bds_a24_")
     comp = os.path.join(tmp, "comp")
     os.makedirs(comp)
     with open(os.path.join(comp, "graph.yml"), "w") as f:
@@ -772,7 +770,7 @@ def a25(spark: SparkSession, sf: str) -> DataFrame:
     equivalent plain SQL filter: pruning must never change results."""
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a25_")
+    tmp = scratch_root("bds_a25_")
     store = TableStore(tmp, "lineitem", spark)
     store.configure(stats_columns=["l_orderkey"])
     li = load(spark, sf, "lineitem").select(
@@ -794,11 +792,9 @@ def a25(spark: SparkSession, sf: str) -> DataFrame:
     "on the version) — surviving table == the oracle's WHERE clause",
 )
 def a26(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = _tf.mkdtemp(prefix="bds_a26_")
+    tmp = scratch_root("bds_a26_")
     st = TableStore(tmp, "events", spark)
     st.configure(
         expectations={
@@ -835,7 +831,7 @@ def a28(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_storage.py::test_zorder_prunes_on_every_dimension."""
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a28_")
+    tmp = scratch_root("bds_a28_")
     store = TableStore(tmp, "events", spark)
     store.configure(zorder_by=["user_id", "value"])
     ev = load(spark, sf, "events").select("event_id", "user_id", "value")
@@ -865,7 +861,7 @@ def a29(spark: SparkSession, sf: str) -> DataFrame:
     proves the bucketed layout changes nothing about results."""
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a29_")
+    tmp = scratch_root("bds_a29_")
     so = TableStore(tmp, "orders_b", spark)
     so.configure(bucket_by=["o_custkey"], num_buckets=8)
     so.write_replace(
@@ -907,7 +903,7 @@ def a30(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = tempfile.mkdtemp(prefix="bds_a30_")
+    tmp = scratch_root("bds_a30_")
     store = TableStore(tmp, "cust", spark)
     c = load(spark, sf, "customer").select("c_custkey", "c_acctbal")
     v1 = store.write_replace(c.filter(F.col("c_acctbal") > 9000))
@@ -942,7 +938,7 @@ def a27(spark: SparkSession, sf: str) -> DataFrame:
 
     from basis_devkit_spark.engine import Engine
 
-    tmp = tempfile.mkdtemp(prefix="bds_a27_")
+    tmp = scratch_root("bds_a27_")
     app = _os.path.join(tmp, "app")
     _os.makedirs(app)
     with open(_os.path.join(app, "graph.yml"), "w") as f:
@@ -1007,11 +1003,9 @@ def a27(spark: SparkSession, sf: str) -> DataFrame:
     "the equivalent filter + CASE projection",
 )
 def a31(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = _tf.mkdtemp(prefix="bds_a31_")
+    tmp = scratch_root("bds_a31_")
     store = TableStore(tmp, "t", spark)
     orders = load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     store.write_replace(orders)
@@ -1052,11 +1046,9 @@ def a31(spark: SparkSession, sf: str) -> DataFrame:
     "set-algebra classification",
 )
 def a32(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = _tf.mkdtemp(prefix="bds_a32_")
+    tmp = scratch_root("bds_a32_")
     store = TableStore(tmp, "t", spark)
     store.configure(unique_on="k")
     orders = load(spark, sf, "orders").select(
@@ -1137,11 +1129,9 @@ def a32(spark: SparkSession, sf: str) -> DataFrame:
     "engines print shortest round-trip decimals below 1e7)",
 )
 def a33(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = _tf.mkdtemp(prefix="bds_a33_")
+    tmp = scratch_root("bds_a33_")
     store = TableStore(tmp, "t", spark)
     orders = load(spark, sf, "orders").select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("p")
@@ -1188,11 +1178,9 @@ def a33(spark: SparkSession, sf: str) -> DataFrame:
     "vacuum structurally cannot reach cross-table absolute refs)",
 )
 def a35(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore
 
-    tmp = _tf.mkdtemp(prefix="bds_a35_")
+    tmp = scratch_root("bds_a35_")
     li = load(spark, sf, "lineitem").select(
         F.col("l_orderkey").alias("k"),
         F.col("l_linenumber").alias("ln"),
@@ -1243,11 +1231,9 @@ def a35(spark: SparkSession, sf: str) -> DataFrame:
     "is never re-read — change-feed cost, not base-scan cost",
 )
 def a36(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.storage.store import TableStore, apply_agg_delta
 
-    tmp = _tf.mkdtemp(prefix="bds_a36_")
+    tmp = scratch_root("bds_a36_")
     base = TableStore(tmp, "base", spark)
     base.configure(unique_on="k")
     orders = load(spark, sf, "orders").select(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basis_devkit_spark.queries import load, register
+from basis_devkit_spark.queries import load, register, scratch_root
 from basis_devkit_spark.queries.relational import drev, dsum_expr
 
 
@@ -575,12 +575,10 @@ def b56(spark: SparkSession, sf: str) -> DataFrame:
     "ships the ORC reader natively; pushdown/pruning apply as on parquet)",
 )
 def b57(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile as _tf
-
     from basis_devkit_spark.sources import read_orc, write_orc
 
     n = load(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = _tf.mkdtemp(prefix="bds_orc_") + "/nation.orc"
+    path = scratch_root("bds_orc_") + "/nation.orc"
     write_orc(n, path)
     return read_orc(spark, path)
 

@@ -7,8 +7,12 @@ Structured Streaming for sources that arrive continuously (webhook drops,
 file landings), with watermarks for late data and checkpointed
 exactly-once sinks — the same semantics the cursor gives batch tables.
 
-All functions take/return streaming DataFrames; callers own the
-``start()``/``awaitTermination`` lifecycle.
+Operators take and return streaming DataFrames. The ``stream_*_to_store``
+sinks return an unstarted ``DataStreamWriter``: foreachBatch under a
+checkpoint, with the default trigger (the next micro-batch starts as soon
+as the previous one commits). Whoever starts the writer owns the running
+query: a long-lived ingest keeps it running, while a bounded replay
+processes what is available and stops it (``queries.drain``).
 """
 
 from __future__ import annotations
@@ -219,11 +223,21 @@ def stateful_running_agg(
     )
 
 
+def _foreach_batch_sink(df: DataFrame, checkpoint_dir: str, write, mode="update"):
+    """The writer every ``stream_*_to_store`` sink returns: ``write(batch_df,
+    batch_id)`` per micro-batch under ``checkpoint_dir``, whose offset log
+    keeps batch ids stable across restarts (the stores' idempotency key)."""
+    return (
+        df.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(mode)
+    )
+
+
 def stream_append_to_store(
     df: DataFrame,
     store,
     checkpoint_dir: str,
-    trigger_seconds: int | None = None,
 ):
     """Exactly-once streaming sink into a MANAGED ``TableStore``:
     ``foreachBatch`` + ``store.append_stream_batch`` — each micro-batch
@@ -236,12 +250,7 @@ def stream_append_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         store.append_stream_batch(batch_df, batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("append")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write, "append")
 
 
 def stream_to_managed_table(
@@ -300,7 +309,6 @@ def stream_upsert_to_store(
     df: DataFrame,
     store,
     checkpoint_dir: str,
-    trigger_seconds: int | None = None,
 ):
     """Exactly-once streaming UPSERT sink into a managed ``TableStore`` —
     the update-mode companion of ``stream_append_to_store``: a streaming
@@ -312,12 +320,7 @@ def stream_upsert_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         store.upsert_stream_batch(batch_df, batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)
 
 
 def stream_merge_to_store(
@@ -325,7 +328,6 @@ def stream_merge_to_store(
     store,
     checkpoint_dir: str,
     merge_fn,
-    trigger_seconds: int | None = None,
 ):
     """Exactly-once streaming MERGE sink — the general form of
     ``stream_upsert_to_store`` for state whose per-key combine is not
@@ -340,12 +342,7 @@ def stream_merge_to_store(
         existing = store.read() if store.has_active_version() else None
         store.upsert_stream_batch(merge_fn(batch_df, existing), batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)
 
 
 def stream_pack_append_to_store(
@@ -357,7 +354,6 @@ def stream_pack_append_to_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_tokens_col: str | None = None,
-    trigger_seconds: int | None = None,
     prepare_fn=None,
 ):
     """Exactly-once INCREMENTAL sequence packing (c23) — the streaming
@@ -386,12 +382,7 @@ def stream_pack_append_to_store(
             prepare_fn=prepare_fn,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)
 
 
 def pack_append_batch(
@@ -543,7 +534,6 @@ def stream_transition_counts_to_store(
     ts_col: str = "ts",
     id_col: str = "event_id",
     event_col: str = "event_type",
-    trigger_seconds: int | None = None,
 ):
     """Exactly-once streaming transition-matrix maintenance (c31): the
     e04 Markov counts kept current per micro-batch at batch cost — the
@@ -559,12 +549,7 @@ def stream_transition_counts_to_store(
             event_col=event_col,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)
 
 
 def novelty_gate_batch(
@@ -615,7 +600,6 @@ def stream_novelty_gate_to_store(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_seconds: int | None = None,
 ):
     """Exactly-once streaming novelty gate (c34): every incoming dump
     batch is scored against the paragraph hashes of EVERYTHING
@@ -631,12 +615,7 @@ def stream_novelty_gate_to_store(
             id_col=id_col, text_col=text_col,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)
 
 
 def cusum_batch(
@@ -778,7 +757,6 @@ def stream_cusum_to_store(
     rows_store,
     state_store,
     checkpoint_dir: str,
-    trigger_seconds: int | None = None,
     **kw,
 ):
     """Exactly-once streaming CUSUM sink (c35): see
@@ -789,9 +767,4 @@ def stream_cusum_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         cusum_batch(rows_store, state_store, batch_df, batch_id, **kw)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, checkpoint_dir, _write)

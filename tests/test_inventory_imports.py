@@ -91,3 +91,35 @@ def test_entry_module_contract() -> None:
     assert set(oracles) <= set(qs), "oracle_sql keys must be registered queries"
     for name, sql in oracles.items():
         assert isinstance(sql, str) and sql.strip(), name
+
+
+def test_stream_replay_scaffolding_lives_only_in_the_harness() -> None:
+    """Streaming entries replay their inputs through ``queries.replay`` /
+    ``queries.drain`` and stage files under ``queries.scratch_root``. No
+    other module under ``queries/`` may call mkdtemp, readStream,
+    maxFilesPerTrigger or processAllAvailable, so the hand-rolled
+    drop-dir/checkpoint copies (and their leaked temp roots) cannot grow
+    back."""
+    import ast
+    import pathlib
+
+    banned = {"mkdtemp", "readStream", "maxFilesPerTrigger", "processAllAvailable"}
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "basis_devkit_spark"
+    hits = []
+    for path in sorted((pkg / "queries").glob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, (ast.keyword, ast.alias)):
+                name = node.arg if isinstance(node, ast.keyword) else node.name
+            elif isinstance(node, ast.Constant):
+                name = node.value
+            else:
+                continue
+            if name in banned:
+                hits.append(f"{path.name}:{node.lineno}: {name}")
+    assert not hits, hits

@@ -610,3 +610,80 @@ def test_cusum_batch_carry_and_crash_replay(spark, tmp_path):
             assert got[eid][c] == expect[eid][c], (eid, c)
     # u2's carry crossed the idle batch: row 7's statistic saw row 3
     assert got[7]["cusum_neg"] == expect[7]["cusum_neg"] != 0.0
+
+
+def test_replay_delivers_dataframe_batches_in_list_order(spark, monkeypatch):
+    """queries.replay: three DataFrame batches, written one file each with
+    strictly increasing pinned mtimes, arrive as micro-batches 0, 1, 2 in
+    list order."""
+    import glob as _glob
+
+    from basis_devkit_spark import queries
+
+    monkeypatch.setattr(queries, "_SCRATCH_ROOTS", [])
+    batches = [
+        spark.createDataFrame([(i, tag) for i in range(3)], "k int, tag string")
+        for tag in ("x", "y", "z")
+    ]
+    stream = queries.replay(spark, batches)
+    files = sorted(
+        _glob.glob(os.path.join(queries._SCRATCH_ROOTS[0], "drop", "*.parquet"))
+    )
+    mtimes = [os.stat(f).st_mtime for f in files]
+    assert len(files) == 3 and mtimes == sorted(set(mtimes))
+
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append((batch_id, sorted({r.tag for r in batch_df.collect()})))
+
+    ckpt = queries.scratch_root("bds_test_ckpt_")
+    queries.drain(
+        stream.writeStream.foreachBatch(record).option("checkpointLocation", ckpt)
+    )
+    assert seen == [(0, ["x"]), (1, ["y"]), (2, ["z"])]
+    queries._remove_scratch_roots()
+
+
+def test_replay_links_path_batches(spark, sf_dir, tmp_path, monkeypatch):
+    """A path batch is staged as a symlink to the file, never a copy; a
+    path batch older than its predecessor would replay out of order, so
+    it raises."""
+    from basis_devkit_spark import queries
+
+    monkeypatch.setattr(queries, "_SCRATCH_ROOTS", [])
+    src = f"{sf_dir}/events.parquet"
+    stream = queries.replay(spark, [src])
+    link = os.path.join(queries._SCRATCH_ROOTS[0], "drop", "00000.parquet")
+    assert os.path.islink(link)
+    assert os.path.realpath(link) == os.path.realpath(src)
+
+    n = []
+    ckpt = queries.scratch_root("bds_test_ckpt_")
+    queries.drain(
+        stream.writeStream.foreachBatch(lambda b, _i: n.append(b.count())).option(
+            "checkpointLocation", ckpt
+        )
+    )
+    assert n == [spark.read.parquet(src).count()]
+
+    old = tmp_path / "old.parquet"
+    old.write_bytes(b"")
+    os.utime(old, (1_600_000_000, 1_600_000_000))
+    with pytest.raises(ValueError, match="older than batch 0"):
+        queries.replay(spark, [spark.range(1), str(old)])
+    queries._remove_scratch_roots()
+
+
+def test_scratch_roots_removed_by_exit_hook(monkeypatch):
+    """Scratch roots outlive the registry call (its lazy frame reads from
+    them) and are removed by the interpreter-exit hook."""
+    from basis_devkit_spark import queries
+
+    monkeypatch.setattr(queries, "_SCRATCH_ROOTS", [])
+    root = queries.scratch_root("bds_test_")
+    os.makedirs(os.path.join(root, "store", "v1"))
+    assert os.path.isdir(root)
+    queries._remove_scratch_roots()
+    assert not os.path.exists(root)
+    assert queries._SCRATCH_ROOTS == []
