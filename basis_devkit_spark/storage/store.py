@@ -8,8 +8,9 @@ version without deleting data; writes go to the active version.
 Layout::
 
     <root>/<table>/
-        _manifest.json          # atomic pointer + schema + counts + roles
-        v=1/part-*.parquet      # one snapshot per version
+        _manifest.json          # atomic pointer + per-version lineage,
+                                # read schema and row count + roles
+        v=1/part-*.parquet      # one directory per write
         v=2/...
 
 Commit protocol (crash-safe, scale-safe):
@@ -26,6 +27,18 @@ version stay byte-stable because no committed directory is ever written
 again. A crash mid-append leaves an orphan directory the manifest never
 references (invisible to readers; reclaimed by vacuum). ``compact()``
 rewrites a long lineage into one directory.
+
+Each version's manifest entry records its **read schema** — the exact
+``StructType`` a read returns (field order, types, nullability, the
+partition columns' discovered types), derived at commit time without a
+Spark job. Every read (``read``, ``read_version``, ``read_pruned``,
+``schema``) hands that schema to the parquet reader, so opening a table
+never infers a schema: an unpartitioned lineage is one scan over all its
+directories, a partitioned one a scan per directory, and neither submits a
+Spark job while a scan has at most
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) root
+paths. A version committed before read schemas were recorded is the only
+exception; it falls back to inferring each lineage directory.
 
 At 100 TB the data write is the expensive distributed part; the manifest is
 O(1) driver-side metadata, so this protocol has no scale bottleneck. Row
@@ -429,9 +442,27 @@ class TableStore:
 
     @property
     def schema(self) -> T.StructType | None:
+        """``read()``'s schema, from the manifest: the active lineage
+        schema, each field carrying the row count as ``bds_record_count``
+        metadata (a correct upper bound after any filter, for join
+        sizing)."""
         if not self.has_active_version():
             return None
-        return self.read().schema
+        s = self._lineage_schema(self._manifest.active_version)
+        rc = self.record_count
+        if rc is None:
+            return s
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    f.dataType,
+                    f.nullable,
+                    {**f.metadata, "bds_record_count": int(rc)},
+                )
+                for f in s.fields
+            ]
+        )
 
     # ---------------- init config (node.py:269-297) ----------------
     def configure(
@@ -544,13 +575,71 @@ class TableStore:
     def _set_version_dirs(self, version: int, dirs: list[str]) -> None:
         self._manifest.versions.setdefault(str(version), {})["dirs"] = list(dirs)
 
-    def _read_dirs(self, dirs: list[str]) -> DataFrame:
-        out: DataFrame | None = None
-        for d in dirs:
-            part = self.spark.read.parquet(os.path.join(self.path, d))
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        assert out is not None
-        return out
+    # ---------------- read schema ----------------
+    def _lineage_schema(self, version: int) -> T.StructType:
+        """The version's read schema from its manifest record. A version
+        committed before records existed (no ``read_schema``) is the one
+        exception: it falls back to inferring every lineage directory and
+        unioning by name, one schema-inference job per directory."""
+        rs = self._manifest.versions.get(str(version), {}).get("read_schema")
+        if rs is not None:
+            return T.StructType.fromJson(rs)
+        parts = [
+            self.spark.read.parquet(os.path.join(self.path, d))
+            for d in self._version_dirs(version)
+        ]
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        ).schema
+
+    def _dir_read_schema(self, written: T.StructType, dirname: str) -> T.StructType:
+        """What a reader infers for a freshly written lineage directory —
+        the written columns made nullable, partition columns last with the
+        types partition discovery gives their directory names — without
+        a footer-inference job: the data columns are handed to the reader,
+        which only lists the directory. A write with no rows leaves no
+        partition directories; its partition columns keep their written
+        types."""
+        pcols = self._manifest.partition_by or []
+        data = T.StructType([f for f in written.fields if f.name not in pcols])
+        s = self.spark.read.schema(data).parquet(os.path.join(self.path, dirname)).schema
+        for c in pcols:
+            if c not in s.names:
+                s = s.add(c, written[c].dataType, True)
+        return s
+
+    def _record_read_schema(self, v: int, schema: T.StructType) -> None:
+        self._manifest.versions.setdefault(str(v), {})["read_schema"] = json.loads(
+            schema.json()
+        )
+
+    def _scan(self, schema: T.StructType, groups: list[tuple[str, list[str]]]) -> DataFrame:
+        """One DataFrame with exactly ``schema`` over ``groups`` — (lineage
+        directory, paths to read under it), relative to the table path.
+        Never infers. Unpartitioned lineages read as one scan (files
+        missing a later-added column read it as NULL). Partitioned
+        lineages read one scan per directory — Spark refuses several
+        ``v=N`` roots of partition directories in one scan — unioned by
+        name, since a scan puts the partition columns it discovers last
+        and a directory with no rows discovers none. One projection then
+        restores the schema's column order and metadata, which partition
+        columns do not take from a reader schema."""
+
+        def path(p: str) -> str:
+            return os.path.join(self.path, p)
+
+        if not self._manifest.partition_by:
+            paths = [path(p) for _d, ps in groups for p in ps]
+            return self.spark.read.schema(schema).parquet(*paths)
+        scans = [
+            self.spark.read.schema(schema)
+            .option("basePath", path(d))
+            .parquet(*[path(p) for p in ps])
+            for d, ps in groups
+        ]
+        return functools.reduce(DataFrame.unionByName, scans).select(
+            *[F.col(f.name).alias(f.name, metadata=f.metadata) for f in schema.fields]
+        )
 
     # ---------------- file statistics (data skipping) ----------------
     def _stats_targets(self) -> list[str]:
@@ -634,22 +723,30 @@ class TableStore:
         whose [min, max] intervals can satisfy every conjunct. Files (or
         whole directories) without stats are conservatively kept. Returns
         ({dir: kept_files}, total_file_count)."""
+        pruned = self._prune(filters, version)
+        kept = {d: k for d, (k, _n) in pruned.items()}
+        return kept, sum(n for _k, n in pruned.values())
+
+    def _prune(
+        self, filters: list[tuple[str, str, Any]], version: int | None = None
+    ) -> dict[str, tuple[list[str], int]]:
+        """``prune_files`` per lineage directory, in lineage order:
+        {dir: (kept_files, file_count)}."""
         v = self._manifest.active_version if version is None else version
         if v is None:
             raise FileNotFoundError(f"table '{self.name}' has no active version")
         tz = self._session_tz()
-        kept: dict[str, list[str]] = {}
-        total = 0
+        out: dict[str, tuple[list[str], int]] = {}
         for d in self._version_dirs(v):
             dstats = self._manifest.dir_stats.get(d, {})
             files = self._list_parquet(d)
-            total += len(files)
-            kept[d] = [
+            kept = [
                 rel
                 for rel in files
                 if _file_may_match(dstats.get(rel), filters, tz)
             ]
-        return kept, total
+            out[d] = (kept, len(files))
+        return out
 
     def _session_tz(self):
         """Spark's session timezone as a tzinfo — the basis Spark uses to
@@ -671,28 +768,26 @@ class TableStore:
         and still pushes down to the surviving scans."""
         if not self.has_active_version():
             raise FileNotFoundError(f"table '{self.name}' has no active version")
-        kept, _total = self.prune_files(filters)
-        out: DataFrame | None = None
-        for d in self._version_dirs(self._manifest.active_version):
-            files = kept.get(d, [])
-            if not files:
-                continue
-            part = (
-                self.spark.read.option("basePath", os.path.join(self.path, d))
-                .parquet(*[os.path.join(self.path, f) for f in files])
-            )
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        if out is None:
-            # Everything pruned — the common steady-state "no new data"
-            # cursor tick. Use the manifest's recorded schema; never pay an
-            # O(lineage) listing just to build an empty DataFrame.
-            sj = self._manifest.versions.get(
-                str(self._manifest.active_version), {}
-            ).get("schema_json")
-            schema = (
-                T.StructType.fromJson(json.loads(sj)) if sj else self.read().schema
-            )
-            out = local_relation(self.spark, [], schema)
+        # read()'s schema whichever files survive: a column added later in
+        # the lineage, or a partition column's type, must not depend on
+        # what the filter happened to keep.
+        schema = self.schema
+        # A directory that lost no file is read whole: one root path rather
+        # than one per file, since Spark lists more than
+        # ``spark.sql.sources.parallelPartitionDiscovery.threshold`` root
+        # paths with a job.
+        groups = [
+            (d, [d] if len(kept) == n else kept)
+            for d, (kept, n) in self._prune(filters).items()
+            if kept
+        ]
+        # Everything pruned — the common steady-state "no new data" cursor
+        # tick — is an empty relation with the same schema.
+        out = (
+            self._scan(schema, groups)
+            if groups
+            else local_relation(self.spark, [], schema)
+        )
         for col, op, val in filters:
             out = out.filter(_filter_expr(col, op, val))
         return out
@@ -722,7 +817,7 @@ class TableStore:
                 "run compact() first"
             )
         loc = os.path.join(self.path, dirs[0])
-        schema = self.read().schema
+        schema = self.schema
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -745,21 +840,19 @@ class TableStore:
     def read(self) -> DataFrame:
         if not self.has_active_version():
             raise FileNotFoundError(f"table '{self.name}' has no active version")
-        df = self._read_dirs(self._version_dirs(self._manifest.active_version))
+        dirs = self._version_dirs(self._manifest.active_version)
+        df = self._scan(self.schema, [(d, [d]) for d in dirs])
         # expose the manifest's persisted row count on the frame: size-
         # aware consumers (e.g. the BPE vocab join auto-sizer) can pick
         # a join strategy without an extra count job over the artifact.
         # Carried TWICE: a Python attribute (exact, but dies on the first
-        # transformation) and column METADATA in the plan itself, which
-        # survives select/filter/rename as long as any original column
-        # does — downstream a filter can only shrink the frame, so the
-        # metadata value is a correct UPPER BOUND for join sizing.
+        # transformation) and column METADATA in the schema the scan is
+        # built with, which survives select/filter/rename as long as any
+        # original column does — downstream a filter can only shrink the
+        # frame, so the metadata value is a correct UPPER BOUND for join
+        # sizing.
         rc = self.record_count
         if rc is not None:
-            for f in df.schema.fields:
-                df = df.withMetadata(
-                    f.name, {**f.metadata, "bds_record_count": int(rc)}
-                )
             df._bds_row_count = rc  # type: ignore[attr-defined]
         return df
 
@@ -781,7 +874,7 @@ class TableStore:
             os.path.isdir(os.path.join(self.path, d)) for d in dirs
         ):
             raise FileNotFoundError(f"table '{self.name}' has no version {version}")
-        return self._read_dirs(dirs)
+        return self._scan(self._lineage_schema(version), [(d, [d]) for d in dirs])
 
     def restore(self, version: int) -> int:
         """Delta-style RESTORE TABLE: make an old version's contents the
@@ -795,8 +888,10 @@ class TableStore:
             )
         dirs = list(self._version_dirs(version))
         rc = self._manifest.versions[str(version)].get("record_count")
+        schema = self._lineage_schema(version)
         v = self.create_new_version()
         self._set_version_dirs(v, dirs)
+        self._record_read_schema(v, schema)
         self._manifest.versions[str(v)]["restored_from"] = version
         self.set_active_version(v, record_count=rc)
         return v
@@ -836,11 +931,11 @@ class TableStore:
         rel_dirs = self._version_dirs(v)
         abs_dirs = [os.path.join(self.path, d) for d in rel_dirs]
         info = self._manifest.versions[str(v)]
+        schema = self._lineage_schema(v)
         tv = target.create_new_version()
         target._set_version_dirs(tv, abs_dirs)
+        target._record_read_schema(tv, schema)
         entry = target._manifest.versions[str(tv)]
-        if info.get("schema_json"):
-            entry["schema_json"] = info["schema_json"]
         entry["cloned_from"] = {
             "table": self.name,
             "path": self.path,
@@ -966,17 +1061,13 @@ class TableStore:
             # shuffle per write; reads on the non-leading dimensions win
             # it back (cluster_by prunes only its first column).
             zcol = "__z"
-            df = (
-                df.withColumn(zcol, _zorder_value(df, zb))
-                .repartitionByRange(zcol)
-                .sortWithinPartitions(zcol)
-                .drop(zcol)
-            )
+            df = df.withColumn(zcol, _zorder_value(df, zb))
+            df = _range_cluster(df, [zcol]).drop(zcol)
         elif cb and all(c in df.columns for c in cb):
             # Range-cluster so each file covers a tight, near-disjoint
             # range of the cluster key → footer stats prune hard. One
             # extra range shuffle per write; reads win it back every time.
-            df = df.repartitionByRange(*cb).sortWithinPartitions(*cb)
+            df = _range_cluster(df, cb)
         w = df.write.mode(mode)
         if self._manifest.partition_by:
             w = w.partitionBy(*self._manifest.partition_by)
@@ -1086,13 +1177,6 @@ class TableStore:
             )
         )
 
-    def _record_schema(self, v: int, df: DataFrame) -> None:
-        """Persist the version's full output schema (incl. partition and
-        decoration columns) in the manifest, so metadata-only paths — e.g.
-        an everything-pruned ``read_pruned`` — never have to construct a
-        DataFrame over the whole lineage just to learn the schema."""
-        self._manifest.versions.setdefault(str(v), {})["schema_json"] = df.schema.json()
-
     def _check_strict_schema(self, df: DataFrame, target: T.StructType) -> None:
         if not self._manifest.strict_schema:
             return
@@ -1112,7 +1196,7 @@ class TableStore:
         v = self.create_new_version()
         n = self._write_counted(df, self.version_path(v))
         self._set_version_dirs(v, [f"v={v}"])
-        self._record_schema(v, df)
+        self._record_read_schema(v, self._dir_read_schema(df.schema, f"v={v}"))
         self._record_violations(v)
         return v, n
 
@@ -1139,15 +1223,23 @@ class TableStore:
                 self.set_active_version(v, record_count=n)
                 return
             prev = self._manifest.active_version
-            existing = self.read()
-            self._check_strict_schema(df, existing.schema)
-            df = _align_columns(df, existing.schema)
+            existing = self._lineage_schema(prev)
+            self._check_strict_schema(df, existing)
+            df = _align_columns(df, existing)
             prev_dirs = self._version_dirs(prev)
             prev_count = self._manifest.versions.get(str(prev), {}).get("record_count")
             v = self.create_new_version()
             n_new = self._write_counted(df, self.version_path(v))
             self._set_version_dirs(v, prev_dirs + [f"v={v}"])
-            self._record_schema(v, df)
+            # The lineage reads as the union by name of its directories:
+            # analysed over two empty relations, so no job and no footer.
+            new_dir = self._dir_read_schema(df.schema, f"v={v}")
+            self._record_read_schema(
+                v,
+                local_relation(self.spark, [], existing)
+                .unionByName(local_relation(self.spark, [], new_dir), allowMissingColumns=True)
+                .schema,
+            )
             self._record_violations(v)
             total = (prev_count + n_new) if prev_count is not None else None
             self.set_active_version(v, record_count=total)
@@ -1481,8 +1573,7 @@ class TableStore:
         """Delete all rows, keep schema (A7)."""
         if not self.has_active_version():
             return
-        schema = self.read().schema
-        empty = local_relation(self.spark, [], schema)
+        empty = local_relation(self.spark, [], self.schema)
         v, _ = self._commit_single_dir_version(empty)
         self.set_active_version(v, record_count=0)
 
@@ -1580,6 +1671,33 @@ class TableStore:
         untouched = old.filter(~in_touched)
         scoped = _anti_join_nullsafe(old.filter(in_touched), df, keys)
         return untouched.unionByName(scoped)
+
+
+def _range_cluster(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Range-partition ``df`` on ``cols`` and sort each partition, with a
+    partition count sized from the input: the summed plan-statistics
+    estimates of the plan's leaves (no job) over
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. Left to itself
+    ``repartitionByRange`` takes ``spark.sql.shuffle.partitions`` — the
+    writer's core count — so the same table got a different file layout,
+    and different pruning, on every machine; AQE does not coalesce an
+    explicit count, so the file count follows the data alone. A leaf
+    without statistics (an RDD-backed frame, some streaming sources)
+    reports ``spark.sql.defaultSizeInBytes`` and is left out; when no leaf
+    has statistics the count is left to Spark."""
+    spark = df.sparkSession
+    unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = [int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())]
+    known = [s for s in sizes if s < unknown]
+    if known:
+        target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        df = df.repartitionByRange(max(1, -(-sum(known) // max(1, target))), *cols)
+    else:
+        df = df.repartitionByRange(*cols)
+    return df.sortWithinPartitions(*cols)
 
 
 def _zorder_value(df: DataFrame, cols: list[str], bits: int = 8):

@@ -3323,13 +3323,11 @@ def test_exact_substring_dedup_merges_disjoint_and_overlapping_spans(spark):
     assert out[2] == ("two trailing bits", 9)
 
 
-def test_ann_index_build_query_equals_one_shot(spark, emb):
+def test_ann_index_build_query_equals_one_shot(spark, emb, tmp_path):
     """Build-once/query-many: ann_join_indexed over the persisted index
     returns byte-identical rows to the one-shot ann_join with the same
     quantizer (parquet round-trips preserve doubles bit-for-bit), and a
     second query against the same index is served without rebuilding."""
-    import tempfile
-
     from basis_devkit_spark.operators.similarity import (
         ann_index_build,
         ann_join,
@@ -3353,7 +3351,7 @@ def test_ann_index_build_query_equals_one_shot(spark, emb):
     centroids_df, cells = ann_index_build(
         right, nlist=8, centroids=seed_cents
     )
-    tmp = tempfile.mkdtemp(prefix="bds_annidx_")
+    tmp = str(tmp_path)
     cstore = TableStore(tmp, "cents", spark)
     cstore.write_replace(centroids_df)
     kstore = TableStore(tmp, "cells", spark)

@@ -568,14 +568,12 @@ def test_exact_substring_dedup_plan_shape(spark):
             assert "__id" in line, f"unpartitioned window: {line}"
 
 
-def test_ann_join_indexed_skips_assignment(spark):
+def test_ann_join_indexed_skips_assignment(spark, tmp_path):
     """d15: querying a persisted ANN index must do NO right-side work
     beyond the candidate equi-join — the cell ASSIGNMENT projection
     (array_min over centroid-distance structs) exists only at build
     time; the query plan carries just the left-side probe (array_sort +
     slice) and no cartesian/NLJ."""
-    import tempfile
-
     from basis_devkit_spark.operators.similarity import (
         ann_index_build,
         ann_join_indexed,
@@ -592,7 +590,7 @@ def test_ann_join_indexed_skips_assignment(spark):
     centroids_df, cells = ann_index_build(right, nlist=8, centroids=seed_cents)
     build_plan = plan_of(cells)
     assert "array_min" in build_plan  # assignment happens at build...
-    tmp = tempfile.mkdtemp(prefix="bds_annidx_plan_")
+    tmp = str(tmp_path)
     cstore = TableStore(tmp, "cents", spark)
     cstore.write_replace(centroids_df)
     kstore = TableStore(tmp, "cells", spark)

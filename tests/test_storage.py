@@ -573,14 +573,16 @@ def test_cluster_by_writes_enable_pruning(spark, tmp_path):
         spark.range(0, 2000)
         .select((F.xxhash64("id") % 2000).alias("k"), F.col("id").alias("v"))
     )
-    # tiny test batch: stop AQE coalescing the range shuffle to 1 file
-    # (at real scale its ~64MB size target is exactly the right behavior)
-    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    # tiny test batch: the range partition count is the input size over
+    # the advisory size, so pin a small one to get several files (at real
+    # scale its ~64MB target is exactly the right behavior)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4096")
     try:
         st.write_replace(df)
     finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
+        spark.conf.set(key, prev)
     total = len(st.read().inputFiles())
     out = st.read_pruned([("k", ">=", 1900)])
     assert len(out.inputFiles()) < total
@@ -1404,3 +1406,392 @@ def test_apply_agg_delta_equals_recompute(spark, tmp_path):
         for r in agg_of(base.read()).collect()
     }
     assert got2 == want2 == {None: (2, 7.0)}
+
+
+# ------------------------------------------------ read schema from the manifest
+def _batch(spark, i, n=50, note=False, day=False, w=False):
+    """Append batch ``i``: keys ``i*n .. i*n+n-1`` with a string payload,
+    optionally an added ``note`` column, a ``day`` partition key or a
+    second z-order dimension ``w``."""
+    cols = [F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")]
+    if day:
+        cols.append((F.col("id") % 3).alias("day"))
+    if w:
+        cols.append(((F.col("id") * 37) % 1000).alias("w"))
+    if note:
+        cols.append(F.lit(f"n{i}").alias("note"))
+    return spark.range(i * n, (i + 1) * n).select(*cols)
+
+
+def _appended(spark, root, name="t", n_dirs=8, **cfg):
+    st = TableStore(root, name, spark)
+    if cfg:
+        st.configure(**cfg)
+    for i in range(n_dirs):
+        st.append(_batch(spark, i, day="partition_by" in cfg, w="zorder_by" in cfg))
+    return st
+
+
+def _inferred_read(store, version=None):
+    """A read built the way it was before versions recorded their read
+    schema: infer every lineage directory, union by name, and tag the
+    active read's fields with the manifest row count. A directory without
+    a data file (an empty write to a partitioned store) has nothing to
+    infer and no rows, so it is left out."""
+    import functools
+    import glob
+
+    spark = store.spark
+    v = store.get_active_version() if version is None else version
+    dirs = [os.path.join(store.path, d) for d in store._version_dirs(v)]
+    parts = [
+        spark.read.parquet(d)
+        for d in dirs
+        if glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    ]
+    df = functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    if version is None and store.record_count is not None:
+        for f in df.schema.fields:
+            df = df.withMetadata(
+                f.name, {**f.metadata, "bds_record_count": store.record_count}
+            )
+    return df
+
+
+def _same(got, want):
+    """Same schema (order, types, nullability, metadata) and the same rows
+    under the correctness sweep's canonical exact comparison."""
+    from tools.sweep_correctness import canon, exact_match
+
+    assert got.schema == want.schema, (got.schema, want.schema)
+    assert exact_match(canon(got.toPandas()), canon(want.toPandas()))
+
+
+def _store_kind(spark, tmp_path, kind):
+    root = str(tmp_path)
+    if kind == "plain":
+        return _appended(spark, root, stats_columns=["k"])
+    if kind == "schema_evolved":
+        st = TableStore(root, "t", spark)
+        st.configure(stats_columns=["k"])
+        for i in range(8):
+            st.append(_batch(spark, i, note=i >= 4))
+        return st
+    if kind == "partitioned":
+        return _appended(spark, root, partition_by=["day"], stats_columns=["k"])
+    if kind == "zorder":
+        return _appended(spark, root, zorder_by=["k", "w"])
+    if kind == "cluster_by":
+        return _appended(spark, root, cluster_by=["k"])
+    if kind == "bucketed":
+        return _appended(spark, root, bucket_by=["k"], num_buckets=4)
+    if kind == "restored":
+        st = _appended(spark, root, stats_columns=["k"])
+        eight = st.get_active_version()
+        st.write_replace(_batch(spark, 99))
+        st.restore(eight)
+        return st
+    if kind == "shallow_clone":
+        src = _appended(spark, os.path.join(root, "src"), stats_columns=["k"])
+        clone = TableStore(os.path.join(root, "clone"), "t", spark)
+        src.clone_shallow(clone)
+        return clone
+    raise AssertionError(kind)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "plain",
+        "schema_evolved",
+        "partitioned",
+        "zorder",
+        "cluster_by",
+        "bucketed",
+        "restored",
+        "shallow_clone",
+    ],
+)
+def test_reads_use_recorded_schema_without_jobs(spark, tmp_path, count_jobs, kind):
+    """Every store kind with an 8-directory lineage opens with no Spark
+    job — ``read()``, ``read_version``, ``read_pruned`` and ``.schema``
+    are built from the manifest's read schema — and each read equals the
+    per-directory inferred union it replaces."""
+    st = _store_kind(spark, tmp_path, kind)
+    v = st.get_active_version()
+    assert len(st._version_dirs(v)) >= 8
+    # an earlier, 5-directory version (a clone has only its own version)
+    older = next((h["version"] for h in st.history() if h["n_dirs"] == 5), v)
+    flt = [("k", ">=", 300)]
+    (read, old, pruned, schema), n_jobs = count_jobs(
+        lambda: (st.read(), st.read_version(older), st.read_pruned(flt), st.schema)
+    )
+    assert n_jobs == 0
+    _same(read, _inferred_read(st))
+    _same(old, _inferred_read(st, older))
+    assert pruned.schema == schema == read.schema
+    _same(pruned, _inferred_read(st).filter(F.col("k") >= 300))
+
+
+def test_truncate_partitioned_store_keeps_read_schema(spark, tmp_path):
+    """An empty write to a partitioned store leaves no partition
+    directories to discover; the version still reads with the previous
+    read schema, partition column included."""
+    st = _appended(spark, str(tmp_path), n_dirs=2, partition_by=["day"])
+    schema = st.read().schema
+    st.truncate()
+    assert st.read().count() == 0 and st.record_count == 0
+    assert [(f.name, f.dataType) for f in st.read().schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]
+    st.append(_batch(spark, 5, day=True))
+    assert st.read().count() == 50
+    assert st.read().schema.simpleString() == "struct<k:bigint,v:string,day:int>"
+    # a batch with an added column: its directory's scan puts the discovered
+    # partition column last (k,v,note,day) while the empty one keeps the
+    # recorded order (k,v,day,note); the scans must still line up by name
+    st.append(_batch(spark, 6, day=True, note=True))
+    assert st.read().schema.simpleString() == (
+        "struct<k:bigint,v:string,day:int,note:string>"
+    )
+    _same(st.read(), _inferred_read(st))
+
+
+def test_legacy_manifest_without_schema_record_infers(spark, tmp_path, count_jobs):
+    """A version committed before read schemas were recorded falls back
+    to inference — even with the old write-order ``schema_json`` present,
+    which is not a read schema — and the next commit records one, after
+    which reads take no job."""
+    import json
+
+    root = tmp_path / "t"
+    versions = {}
+    for i in range(8):
+        _batch(spark, i, day=True).write.partitionBy("day").parquet(str(root / f"v={i + 1}"))
+        versions[str(i + 1)] = {
+            "version": i + 1,
+            "created_at": 0.0,
+            "dirs": [f"v={j + 1}" for j in range(i + 1)],
+            "record_count": 50 * (i + 1),
+            "schema_json": _batch(spark, i, day=True).schema.json(),
+        }
+    with open(root / "_manifest.json", "w") as f:
+        json.dump(
+            {"name": "t", "active_version": 8, "next_version": 9, "versions": versions,
+             "partition_by": ["day"], "commit_seq": 1},
+            f,
+        )
+    st = TableStore(str(tmp_path), "t", spark)
+    _same(st.read(), _inferred_read(st))
+    assert st.read().columns == ["k", "v", "day"]
+    _same(st.read_version(3), _inferred_read(st, 3))
+    assert st.read_pruned([("k", ">=", 300)]).schema == st.read().schema
+    st.append(_batch(spark, 8, day=True))
+    assert "read_schema" in st._manifest.versions[str(st.get_active_version())]
+    (read, schema), n_jobs = count_jobs(lambda: (st.read(), st.schema))
+    assert n_jobs == 0
+    _same(read, _inferred_read(st))
+    assert schema == read.schema
+
+
+def test_every_commit_records_read_schema(spark, tmp_path, count_jobs):
+    """Each version-creating verb — replace, append, upsert, truncate,
+    compact, delete/update, restore, shallow clone and import — records
+    the read schema, so the version it commits opens with no job and
+    reads exactly like the inferred union."""
+    from basis_devkit_spark.storage.interop import export_table, import_table
+
+    st = TableStore(str(tmp_path / "a"), "t", spark)
+    st.configure(partition_by=["day"], unique_on=["k"])
+
+    def check(store):
+        entry = store._manifest.versions[str(store.get_active_version())]
+        assert "read_schema" in entry
+        read, n_jobs = count_jobs(store.read)
+        assert n_jobs == 0
+        if store.record_count:
+            _same(read, _inferred_read(store))
+
+    st.write_replace(_batch(spark, 0, day=True))
+    check(st)
+    first = st.get_active_version()
+    st.append(_batch(spark, 1, day=True, note=True))
+    check(st)
+    st.upsert(_batch(spark, 1, n=25, day=True))
+    check(st)
+    st.delete_where("k < 10")
+    check(st)
+    st.update_where({"v": "'u'"}, "k < 20")
+    check(st)
+    st.compact()
+    check(st)
+    schema = st.read().schema
+    st.truncate()
+    check(st)
+    assert [(f.name, f.dataType) for f in st.read().schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]
+    st.restore(first)
+    check(st)
+    clone = TableStore(str(tmp_path / "b"), "t", spark)
+    st.clone_shallow(clone)
+    check(clone)
+    export_table(st, str(tmp_path / "export"))
+    imported = TableStore(str(tmp_path / "c"), "t", spark)
+    import_table(imported, str(tmp_path / "export"))
+    check(imported)
+    assert imported.read().schema.simpleString() == st.read().schema.simpleString()
+
+
+def test_read_pruned_schema_keeps_column_added_later(spark, tmp_path):
+    """A filter that keeps only files from before a column was added still
+    returns that column (as NULL): the schema is read()'s, not the
+    surviving files'."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(stats_columns=["k"])
+    st.append(spark.range(0, 10).select(F.col("id").alias("k")))
+    st.append(spark.range(10, 20).select(F.col("id").alias("k"), F.lit("x").alias("note")))
+    out = st.read_pruned([("k", "<", 5)])
+    assert out.schema == st.read().schema
+    assert out.columns == ["k", "note"]
+    assert sorted((r.k, r.note) for r in out.collect()) == [(k, None) for k in range(5)]
+
+
+def test_read_pruned_everything_pruned_partitioned_schema(spark, tmp_path):
+    """Everything pruned on a partitioned store: the empty result has
+    read()'s column order and partition-column type, not the write's."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(partition_by=["day"], stats_columns=["k"])
+    st.write_replace(
+        spark.range(6).select(
+            F.col("id").alias("k"), (F.col("id") % 2).alias("day"), F.lit(1.0).alias("value")
+        )
+    )
+    out = st.read_pruned([("k", ">", 1_000_000)])
+    assert out.count() == 0
+    assert out.schema == st.read().schema
+    assert out.schema.simpleString() == "struct<k:bigint,value:double,day:int>"
+
+
+@pytest.mark.parametrize("verb", ["append", "upsert"])
+def test_crash_at_manifest_flip_then_replay_ingests_once(spark, tmp_path, monkeypatch, verb):
+    """Fault injection at the commit point: the version directory is
+    written, then the manifest flip (``os.replace``) raises. A reopened
+    store reads the previous version — rows, recorded schema, record
+    count — with the orphan directory outside its lineage, and replaying
+    the micro-batch with the same id ingests it exactly once."""
+    from basis_devkit_spark.storage.store import MANIFEST
+
+    root = str(tmp_path)
+    st = TableStore(root, "t", spark)
+    if verb == "upsert":
+        st.configure(unique_on="k")
+    sink = f"{verb}_stream_batch"
+    assert getattr(st, sink)(_batch(spark, 0, n=10), 0)
+    rows = sorted(map(tuple, st.read().collect()))
+    schema, count, active = st.schema, st.record_count, st.get_active_version()
+    # the crashing batch overlaps the keys (an upsert replaces 5..9) and
+    # adds a column, so a leaked schema or row would show
+    crash = _batch(spark, 0, n=10).filter("k >= 5").unionByName(
+        _batch(spark, 1, n=10), allowMissingColumns=True
+    ).withColumn("note", F.lit("late"))
+
+    real = os.replace
+
+    def flip_fails(src, dst):
+        if dst.endswith(MANIFEST):
+            raise OSError("crash before the manifest flip (injected)")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", flip_fails)
+    with pytest.raises(OSError):
+        getattr(st, sink)(crash, 1)
+    monkeypatch.undo()
+
+    re = TableStore(root, "t", spark)
+    assert re.get_active_version() == active
+    assert sorted(map(tuple, re.read().collect())) == rows
+    assert re.schema == schema
+    assert re.record_count == count
+    orphans = [
+        d for d in os.listdir(re.path)
+        if d.startswith("v=") and d not in re._version_dirs(active)
+    ]
+    assert orphans == [f"v={active + 1}"]
+    assert os.listdir(os.path.join(re.path, orphans[0]))  # data was written
+
+    assert getattr(re, sink)(crash, 1) is True
+    assert getattr(re, sink)(crash, 1) is False  # a replay after the commit
+    got = re.read()
+    assert got.columns == ["k", "v", "note"]
+    want = 25 if verb == "append" else 20
+    assert re.record_count == want == got.count()
+    assert got.filter("note = 'late'").count() == 15
+    assert TableStore(root, "t", spark).read().count() == want
+
+
+def test_range_layout_without_input_statistics(spark, tmp_path):
+    """An RDD-backed batch has no size statistics (Spark reports
+    ``spark.sql.defaultSizeInBytes``); its clustered write leaves the
+    range partition count to Spark, so a 100-row batch writes at most
+    ``spark.sql.shuffle.partitions`` files rather than one per sampled
+    key."""
+    df = spark.createDataFrame(
+        [(i, (i * 37) % 100) for i in range(100)], "k long, w long"
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for name, cfg in (("range", {"cluster_by": ["k"]}), ("zorder", {"zorder_by": ["k", "w"]})):
+        st = TableStore(str(tmp_path), name, spark)
+        st.configure(**cfg)
+        st.write_replace(df)
+        n_files = sum(len(f) for f in st.prune_files([])[0].values())
+        assert 1 <= n_files <= cap, (name, n_files)
+        assert sorted(map(tuple, st.read().collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_range_layout_file_count_ignores_core_count(tmp_path):
+    """The same input written z-ordered and range-clustered gets the same
+    number of files on 2 cores and on 8: the range partition count comes
+    from the input size, not from spark.sql.shuffle.partitions."""
+    import json
+    import subprocess
+    import sys
+
+    script = """
+import json, sys
+sys.path.insert(0, sys.argv[2])
+from pyspark.sql import functions as F
+from basis_devkit_spark.session import get_spark
+from basis_devkit_spark.storage.store import TableStore
+spark = get_spark()
+for key in (
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+):
+    spark.conf.set(key, "8192")
+df = spark.range(20000).select(
+    F.col("id").alias("rid"),
+    F.abs(F.hash("id", F.lit(11)) % 10000).alias("x"),
+    F.abs(F.hash("id", F.lit(12)) % 10000).alias("y"),
+)
+out = {}
+for name, cfg in (("zorder", {"zorder_by": ["x", "y"]}), ("range", {"cluster_by": ["x"]})):
+    st = TableStore(sys.argv[1], name, spark)
+    st.configure(**cfg)
+    st.write_replace(df)
+    out[name] = sum(len(f) for f in st.prune_files([])[0].values())
+print(json.dumps(out))
+spark.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    counts = {}
+    for cpus in (2, 8):
+        env = {**os.environ, "SPARK_GRAFT_CPUS": str(cpus), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+        proc = subprocess.run(
+            [sys.executable, "-c", script, str(tmp_path / f"cpus{cpus}"), repo],
+            env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        counts[cpus] = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert counts[2] == counts[8], counts
+    assert all(n > 4 for n in counts[2].values()), counts
